@@ -1,8 +1,11 @@
 package graft.pipeline
 
+import java.util.concurrent.atomic.AtomicReference
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.model.Schemas
 import graft.ops.RefOps
@@ -14,7 +17,8 @@ import graft.sources.{RestScan, Transport}
   * a parquet warehouse. Each stage cites the reference function it
   * re-homes. XCom whole-table hops (reference dags/etl.py:40,81,121-122,167)
   * become plain DataFrame lineage; the two multi-consumer stages are
-  * `.persist()`ed — exactly the reference's fan-out points.
+  * `.persist()`ed — exactly the reference's fan-out points — and each
+  * merge caches its own source for its two reads.
   */
 object SendoPipeline {
 
@@ -153,11 +157,14 @@ object SendoPipeline {
   }
 
   /** S7/P5/U2/P3/P8 (etl.py:125-167): paginated rating scan per shop,
-    * tagged with its shop_id, dates parsed day-first. */
+    * tagged with its shop_id, dates parsed day-first. Each shop is
+    * scanned once: two detail pages can answer with the same shop, and
+    * scanning it twice would only fetch the same pages again for rows
+    * the merge drops as duplicates. */
   def ratings(spark: SparkSession, shopInfos: DataFrame,
       transport: Transport): DataFrame = {
     import spark.implicits._
-    val keys = shopInfos.select(col("shop_id")).as[String]
+    val keys = shopInfos.select(col("shop_id")).distinct().as[String]
     val pages = RestScan.paginated(keys, ratingUrl, transport,
       RestScan.ratingLastPage).toDF("shop_id", "page", "body")
     val parsed = pages
@@ -177,7 +184,9 @@ object SendoPipeline {
       schema: StructType): DataFrame = {
     val path = new org.apache.hadoop.fs.Path(s"$warehouseDir/$name")
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(path)) spark.read.parquet(path.toString)
+    // The declared schema spares the Spark job that parquet schema
+    // inference runs to read footers, once per read.
+    if (fs.exists(path)) spark.read.schema(schema).parquet(path.toString)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
@@ -186,12 +195,19 @@ object SendoPipeline {
     * The staging-table lifecycle lives inside [[Upsert.upsert]]'s
     * semantics; a write-to-stage + rename-swap replaces MySQL's
     * staging+merge+drop. The merged plan still READS the current table
-    * files while the stage write runs, so no caching is needed and a
-    * lost/evicted partition recomputes safely — mode("overwrite") onto
+    * files while the stage write runs, so the target is never cached and
+    * a lost/evicted partition recomputes safely — mode("overwrite") onto
     * the path being read would delete its own input on recompute. (On a
     * rename-less object store this swap becomes a metastore/manifest
     * pointer flip; the two-rename window is the same one HDFS table
-    * swaps accept.) */
+    * swaps accept.)
+    *
+    * The SOURCE is read twice by the upsert (anti join and union), so it
+    * is computed once: persisted for the stage write unless the caller
+    * already cached it, and released right after. Only the day's delta
+    * is ever cached. For a REST-backed source this is also a consistency
+    * rule, not just a saving: two scans could see two versions of the
+    * origin, and a row could then land beside the one it replaces. */
   def mergeTable(spark: SparkSession, warehouseDir: String, name: String,
       schema: StructType, source: DataFrame, pk: String): Unit = {
     val finalPath = new org.apache.hadoop.fs.Path(s"$warehouseDir/$name")
@@ -209,7 +225,10 @@ object SendoPipeline {
       .select(source.columns.map(col).toIndexedSeq: _*)
     val merged = Upsert.upsert(target, source, Seq(pk))
     if (fs.exists(stage)) fs.delete(stage, true)
-    merged.write.mode("overwrite").parquet(stage.toString)
+    val ownsCache = source.storageLevel == StorageLevel.NONE
+    if (ownsCache) source.persist(StorageLevel.MEMORY_AND_DISK)
+    try merged.write.mode("overwrite").parquet(stage.toString)
+    finally if (ownsCache) source.unpersist()
     if (fs.exists(old)) fs.delete(old, true)
     if (fs.exists(finalPath) && !fs.rename(finalPath, old))
       throw new java.io.IOException(s"mergeTable: could not move $finalPath aside")
@@ -218,7 +237,18 @@ object SendoPipeline {
     fs.delete(old, true)
   }
 
-  /** The full DAG (etl.py:329-343). Returns the three final tables. */
+  /** The full DAG (etl.py:329-343). Returns the three final tables.
+    *
+    * The rating load and the shop → product load share no table, so they
+    * run side by side as the reference's DAG runs them (D2/D3): the
+    * rating merge on a thread started here, the shop chain on the
+    * caller's thread. A fresh thread, not a pooled one, inherits Spark's
+    * thread-local properties (job group, scheduler pool) from this
+    * caller rather than from whoever created a pool thread. Both
+    * branches are joined before `run` returns or throws; the first
+    * failure is rethrown, the other attached as suppressed. A failed
+    * merge leaves its table as it was (the stage is never published), so
+    * a re-run converges. */
   def run(spark: SparkSession, transport: Transport,
       warehouseDir: String): Map[String, DataFrame] = {
     val subCats = subCategories(spark, transport)
@@ -226,20 +256,35 @@ object SendoPipeline {
     val shops = shopInfos(spark, prods, transport).persist()    // 2 consumers
     val rats = ratings(spark, shops, transport)
 
+    val failure = new AtomicReference[Throwable]()
+    def record(e: Throwable): Unit =
+      if (!failure.compareAndSet(null, e) && (failure.get ne e))
+        failure.get.addSuppressed(e)
+
     // Rating load (etl.py:170-203). The reference's 5-way fan-out (D2/U5)
     // is subsumed by partition parallelism inside one merge.
-    mergeTable(spark, warehouseDir, "rating", Schemas.rating, rats, "rating_id")
+    val ratingLoad = new Thread(() =>
+      try mergeTable(spark, warehouseDir, "rating", Schemas.rating, rats, "rating_id")
+      catch { case e: Throwable => record(e) },
+      "sendo-rating-load")
+    ratingLoad.start()
 
     // Shop load, then RI-filtered product load (etl.py:206-281):
-    mergeTable(spark, warehouseDir, "shop_info", Schemas.shopInfo, shops, "shop_id")
-    val dbShopIds = readTable(spark, warehouseDir, "shop_info", Schemas.shopInfo)
-      .select("shop_id") // S8 read-back
-    val validShops = RefOps.distinctKeys("shop_id")(dbShopIds, shops) // U4
-    val rifProducts = RefOps.riFilter(validShops, "shop_id")(prods)   // P9
-    mergeTable(spark, warehouseDir, "product_detail", Schemas.productDetail,
-      rifProducts, "product_id")
+    try {
+      mergeTable(spark, warehouseDir, "shop_info", Schemas.shopInfo, shops, "shop_id")
+      val dbShopIds = readTable(spark, warehouseDir, "shop_info", Schemas.shopInfo)
+        .select("shop_id") // S8 read-back
+      val validShops = RefOps.distinctKeys("shop_id")(dbShopIds, shops) // U4
+      val rifProducts = RefOps.riFilter(validShops, "shop_id")(prods)   // P9
+      mergeTable(spark, warehouseDir, "product_detail", Schemas.productDetail,
+        rifProducts, "product_id")
+    } catch { case e: Throwable => record(e) }
+    finally {
+      ratingLoad.join()
+      prods.unpersist(); shops.unpersist()
+    }
+    Option(failure.get).foreach(e => throw e)
 
-    prods.unpersist(); shops.unpersist()
     Map(
       "shop_info" -> readTable(spark, warehouseDir, "shop_info", Schemas.shopInfo),
       "product_detail" -> readTable(spark, warehouseDir, "product_detail", Schemas.productDetail),

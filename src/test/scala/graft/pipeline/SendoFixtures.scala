@@ -1,6 +1,9 @@
 package graft.pipeline
 
-import graft.sources.FakeTransport
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.sources.{FakeTransport, Transport}
 
 /** In-memory fixture world shaped exactly like the four sendo endpoints
   * (FIXTURES.md §2), with the documented edge cases: multi-page scans,
@@ -87,4 +90,37 @@ object SendoFixtures {
 
   def transport(r1Comment: String = "Tốt"): FakeTransport =
     new FakeTransport(pages(r1Comment))
+}
+
+/** Counts requests per URL. Tasks run on deserialized copies of the
+  * transport, so the counts live in a JVM-wide map keyed by this
+  * instance's id rather than in the instance. */
+class CountingTransport(inner: Transport) extends Transport {
+  private val id = java.util.UUID.randomUUID().toString
+  override def get(url: String): String = {
+    CountingTransport.hits
+      .computeIfAbsent((id, url), _ => new AtomicInteger()).incrementAndGet()
+    inner.get(url)
+  }
+  def counts: Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    CountingTransport.hits.asScala.collect {
+      case ((`id`, url), n) => url -> n.get
+    }.toMap
+  }
+}
+
+object CountingTransport {
+  private val hits = new ConcurrentHashMap[(String, String), AtomicInteger]()
+}
+
+/** Fails every request for `badUrl` after `delayMs`, as an origin that
+  * keeps answering 503 past the retries would. */
+class FailingTransport(inner: Transport, badUrl: String, delayMs: Long)
+    extends Transport {
+  override def get(url: String): String =
+    if (url == badUrl) {
+      Thread.sleep(delayMs)
+      throw new java.io.IOException(s"HTTP 503 for $url")
+    } else inner.get(url)
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -83,5 +84,77 @@ class SendoPipelineSpec extends AnyFunSuite with SparkTestBase {
     val changedKeys = ratingsAfter.collect().toSet.diff(before)
       .map(_.getAs[String]("rating_id"))
     assert(changedKeys == Set("r1"))
+  }
+
+  private def snapshot(wh: String): Map[String, Set[org.apache.spark.sql.Row]] =
+    Seq("shop_info" -> graft.model.Schemas.shopInfo,
+      "product_detail" -> graft.model.Schemas.productDetail,
+      "rating" -> graft.model.Schemas.rating).map { case (n, schema) =>
+      n -> SendoPipeline.readTable(spark, wh, n, schema).collect().toSet
+    }.toMap
+
+  private def persistentRdds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("run requests each URL at most once") {
+    val transport = new CountingTransport(SendoFixtures.transport())
+    SendoPipeline.run(spark, transport, freshDir())
+    val counts = transport.counts
+    val repeated = counts.filter(_._2 > 1)
+    assert(repeated.isEmpty, s"fetched more than once: $repeated")
+    assert(counts.keySet.exists(_.contains("/shop/rating/")))
+  }
+
+  test("mergeTable keeps a source the caller cached, and does not refetch it") {
+    val transport = new CountingTransport(SendoFixtures.transport())
+    val prods = SendoPipeline.products(spark,
+      SendoPipeline.subCategories(spark, transport), transport).persist()
+    val shops = SendoPipeline.shopInfos(spark, prods, transport).persist()
+    try {
+      shops.count()
+      val fetched = transport.counts
+      SendoPipeline.mergeTable(spark, freshDir(), "shop_info",
+        graft.model.Schemas.shopInfo, shops, "shop_id")
+      assert(shops.storageLevel != StorageLevel.NONE)
+      assert(transport.counts == fetched, "the merge refetched shop detail pages")
+    } finally { shops.unpersist(); prods.unpersist() }
+  }
+
+  test("mergeTable releases a source it cached itself, pass after pass") {
+    val before = persistentRdds
+    val wh = freshDir()
+    val rats = SendoPipeline.ratings(spark,
+      Seq("501", "503").toDF("shop_id"), SendoFixtures.transport())
+    SendoPipeline.mergeTable(spark, wh, "rating", graft.model.Schemas.rating,
+      rats, "rating_id")
+    assert(rats.storageLevel == StorageLevel.NONE)
+    (1 to 2).foreach(_ => SendoPipeline.run(spark, SendoFixtures.transport(), wh))
+    val leaked = persistentRdds -- before
+    assert(leaked.isEmpty, s"cached RDDs left behind: $leaked")
+  }
+
+  test("a permanently failing rating page fails run, keeps the rating table, and a re-run converges") {
+    val clean = freshDir()
+    val wh = freshDir()
+    Seq(clean, wh).foreach { d =>
+      SendoPipeline.run(spark, SendoFixtures.transport(r1Comment = "Cũ"), d)
+    }
+    SendoPipeline.run(spark, SendoFixtures.transport(), clean)
+    val ratingsBefore = snapshot(wh)("rating")
+
+    // The failure comes late, after the shop chain has likely finished,
+    // so `run` must wait for the rating branch to see it.
+    val badUrl = SendoPipeline.ratingUrl("503", 1)
+    val err = intercept[Throwable] {
+      SendoPipeline.run(spark,
+        new FailingTransport(SendoFixtures.transport(), badUrl, delayMs = 3000), wh)
+    }
+    val causes = Iterator.iterate(err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(e => Option(e.getMessage).exists(_.contains(badUrl))),
+      s"run threw $err, not the failed fetch")
+    assert(snapshot(wh)("rating") == ratingsBefore, "the failed merge changed the rating table")
+
+    SendoPipeline.run(spark, SendoFixtures.transport(), wh)
+    assert(snapshot(wh) == snapshot(clean))
   }
 }
