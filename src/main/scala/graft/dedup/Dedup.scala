@@ -141,50 +141,54 @@ object Dedup {
     * Scale shape: one shingle-aggregate shuffle + one (band, bh) window
     * shuffle, both O(batch); the index probe is a semi join against the
     * persisted bucket table (pre-bucketed by key in a real warehouse, so
-    * the batch side streams against it without moving the index). */
+    * the batch side streams against it without moving the index).
+    *
+    * Returns (kept rows, the survivors' distinct (band, bh) keys) — see
+    * [[incrementalBucketDedup]]; the keys equal `minhashBandIndex(kept)`. */
   def incrementalMinhashDedup(batch: DataFrame, bandIndex: DataFrame,
       textCol: String, idCol: String,
       shingleN: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
-      family: MinHashFamily = xxFamily): DataFrame =
-    incrementalMinhashDedupWithIndex(batch, bandIndex, textCol, idCol,
-      shingleN, bands, rowsPerBand, family)._1
+      family: MinHashFamily = xxFamily): (DataFrame, DataFrame) =
+    incrementalBucketDedup(batch, idCol,
+      bandedBuckets(batch, textCol, idCol, shingleN, bands, rowsPerBand,
+        family),
+      bandIndex, Seq("band", "bh"))
 
-  /** [[incrementalMinhashDedup]] returning ALSO the survivors' distinct
-    * (band, bh) bucket keys — derived from the SAME pinned bucket table
-    * the dedup used, so an ingest caller can fold survivors into the
-    * persisted index WITHOUT a second shingle+signature pass over the
-    * text (that pass is the dominant per-batch cost; recomputing it via
-    * [[minhashBandIndex]] on the survivors roughly doubled
-    * `stream_neardup_batches`). Identical keys to
-    * `minhashBandIndex(kept)` by construction: the bucket table is a
-    * pure function of each row. */
-  def incrementalMinhashDedupWithIndex(batch: DataFrame,
-      bandIndex: DataFrame, textCol: String, idCol: String,
-      shingleN: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
-      family: MinHashFamily = xxFamily): (DataFrame, DataFrame) = {
-    // Four plan branches consume the banded buckets (the index probe,
-    // both sides of the internal min-id window, the survivor-key
-    // anti-join); pin them so the shingle-digest + signature pipeline
-    // runs over the batch once, not per branch — the same diamond
-    // semanticDedupAssigned pins. O(batch) rows by construction, so the
-    // pin is batch-sized at any corpus size.
-    val banded = bandedBuckets(batch, textCol, idCol, shingleN, bands,
-      rowsPerBand, family).localCheckpoint()
+  /** The shared core of the incremental near-dup paths. `bucketed` holds
+    * the batch's (id, key...) bucket rows; a batch row drops iff one of
+    * its buckets is in `index` or it shares a bucket with a smaller-id
+    * batch row. Returns (kept batch rows, the survivors' distinct bucket
+    * keys) — the keys come from the SAME pinned bucket table the dedup
+    * used, so an ingest caller folds survivors into the persisted index
+    * WITHOUT a second hashing pass over the batch (that pass is the
+    * dominant per-batch cost; recomputing it on the survivors roughly
+    * doubled `stream_neardup_batches`). Identical keys to indexing the
+    * kept rows afresh by construction: the bucket table is a pure
+    * function of each row. */
+  private def incrementalBucketDedup(batch: DataFrame, idCol: String,
+      bucketed: DataFrame, index: DataFrame,
+      keys: Seq[String]): (DataFrame, DataFrame) = {
+    // Four plan branches consume the buckets (the index probe, both
+    // sides of the internal min-id window, the survivor-key anti-join);
+    // pin them so the hashing pipeline runs over the batch once, not
+    // per branch. O(batch) rows by construction, so the pin is
+    // batch-sized at any corpus size.
+    val banded = bucketed.localCheckpoint()
+    val keyCols = keys.map(col)
     val idxHits = banded
-      .join(bandIndex.select(col("band"), col("bh")), Seq("band", "bh"),
-        "left_semi")
+      .join(index.select(keyCols: _*), keys, "left_semi")
       .select(col("id"))
     val internal = banded
       .withColumn("__minid",
-        min(col("id")).over(Window.partitionBy(col("band"), col("bh"))))
+        min(col("id")).over(Window.partitionBy(keyCols: _*)))
       .filter(col("id") > col("__minid"))
       .select(col("id"))
     val dropped = idxHits.union(internal).distinct()
     val kept = batch.join(dropped.withColumnRenamed("id", idCol),
       Seq(idCol), "left_anti")
-    val keptBuckets = banded.join(dropped, Seq("id"), "left_anti")
-      .select(col("band"), col("bh")).distinct()
-    (kept, keptBuckets)
+    val keptKeys = banded.join(dropped, Seq("id"), "left_anti")
+      .select(keyCols: _*).distinct()
+    (kept, keptKeys)
   }
 
   /** (id, shingle) exploded distinct-shingle table — the join key space
@@ -750,20 +754,25 @@ object Dedup {
   }
 
   /** Semantic (embedding-space) dedup, SemDeDup-style: bucket vectors by
-    * nearest deterministic centroid, find within-bucket pairs with cosine
+    * nearest centroid of `cents`, find within-bucket pairs with cosine
     * ≥ `threshold`, and drop the larger id of every such pair — the
     * standard greedy keep-lowest-id survivor rule (NOT transitive
     * closure: a doc survives unless some smaller-id near-duplicate shares
     * its bucket). Returns survivors as (vid, bucket).
     *
+    * `cents` is a (centroid_id, centv) table:
+    * [[graft.functions.Knn.firstCentroids]] (deterministic, any engine
+    * replays it) or [[graft.functions.Knn.kmeans]]-trained (the 100 TB
+    * setting: balanced buckets bound the within-bucket quadratic term
+    * when first-C-ids centroids would let one fat bucket dominate; size
+    * the centroid count with the corpus — √N keeps expected bucket
+    * population ~√N, so pair work ~N^1.5 total instead of N²/C).
+    *
     * Scale shape: assignment is [[graft.functions.Knn.ivfAssign]]'s
     * shuffle-free broadcast projection; the pairwise cosine is quadratic
     * only WITHIN a bucket (the SemDeDup point — k buckets cut the full pair
     * space by ~k), executed as a self equi-join on `bucket`, so the
-    * shuffle key is the bucket id. Bucket skew is the risk at 100 TB:
-    * use k-means centroids ([[graft.functions.Knn.kmeans]]) for balanced
-    * buckets, and raise `centroids` with corpus size so per-bucket
-    * populations stay bounded.
+    * shuffle key is the bucket id.
     *
     * `pairScoreFn` customizes only the WITHIN-BUCKET pair score; bucket
     * assignment is always cosine-nearest-centroid (ivfAssign's metric).
@@ -772,38 +781,9 @@ object Dedup {
     * cosine-shaped; pairs similar under the custom score whose vectors
     * bucket apart under cosine are never considered. */
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: Int, threshold: Double,
+      cents: DataFrame, threshold: Double,
       pairScoreFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.cosine): DataFrame =
-    semanticDedupAssigned(
-      graft.functions.Knn.ivfAssign(corpus, idCol, vecCol, centroids),
-      threshold, pairScoreFn)
-
-  /** [[semanticDedup]] with k-means-TRAINED centroids (the 100 TB
-    * setting): trained centroids give balanced buckets, which is what
-    * bounds the within-bucket quadratic term when deterministic
-    * first-C-ids centroids would let one fat bucket dominate. Size
-    * `centroids` with the corpus (√N keeps expected bucket population
-    * ~√N, so pair work ~N^1.5 total instead of N²/C). Not oracle-SQL
-    * replayable — k-means means are float avgs whose value depends on
-    * reduction order — so correctness is spec-pinned structurally
-    * (DedupSpec) rather than hash-compared. */
-  def semanticDedupTrained(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: Int, iterations: Int, threshold: Double,
-      pairScoreFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.cosine,
-      replayable: Boolean = false): DataFrame = {
-    val cents = graft.functions.Knn
-      .kmeans(corpus, idCol, vecCol, centroids, iterations,
-        replayable = replayable)
-    semanticDedupAssigned(
-      graft.functions.Knn.assignWith(corpus, idCol, vecCol, cents),
-      threshold, pairScoreFn)
-  }
-
-  /** Shared pair→drop→survivor tail over a (vid, v, bucket) assignment. */
-  private def semanticDedupAssigned(assignment: DataFrame, threshold: Double,
-      pairScoreFn: (Column, Column) => Column): DataFrame = {
+        graft.functions.VectorFunctions.cosine): DataFrame = {
     // Three plan branches read the assignment (both pair-join sides and
     // the survivor anti join); pin it so the centroid argmin runs over
     // the corpus once, not three times (same diamond as jaccardPairs).
@@ -811,8 +791,8 @@ object Dedup {
     // full payload — so by the probe-16 rule its deserialized blocks
     // must never compete with the pair join's execution memory (the
     // exact failure mode probe 16b measured on the shingle pins).
-    val assigned = assignment.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    val assigned = graft.functions.Knn.ivfAssign(corpus, idCol, vecCol, cents)
+      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val a = assigned.select(col("bucket"), col("vid").as("id_a"),
       col("v").as("va"))
     val b = assigned.select(col("bucket"), col("vid").as("id_b"),
@@ -975,46 +955,20 @@ object Dedup {
     *
     * Scale shape: one unshuffled bucketing pass over the batch (planes
     * broadcast), one (t, bucket) window shuffle O(batch·tables), one
-    * semi-join probe against the pre-bucketed index. */
+    * semi-join probe against the pre-bucketed index.
+    *
+    * Returns (kept rows, the survivors' distinct (t, bucket) keys) — see
+    * [[incrementalBucketDedup]]; the keys equal
+    * `embeddingLshIndex(kept)`. */
   def incrementalEmbeddingDedup(batch: DataFrame, lshIndex: DataFrame,
       idCol: String, vecCol: String, dims: Int,
       tables: Int = 8, bits: Int = 12,
       dotFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.dotNative): DataFrame =
-    incrementalEmbeddingDedupWithIndex(batch, lshIndex, idCol, vecCol,
-      dims, tables, bits, dotFn)._1
-
-  /** [[incrementalEmbeddingDedup]] returning ALSO the survivors'
-    * distinct (t, bucket) signature keys — from the same pinned bucket
-    * table, so ingest callers skip a second T·B-dot signing pass (the
-    * [[incrementalMinhashDedupWithIndex]] rationale in vector space). */
-  def incrementalEmbeddingDedupWithIndex(batch: DataFrame,
-      lshIndex: DataFrame, idCol: String, vecCol: String, dims: Int,
-      tables: Int = 8, bits: Int = 12,
-      dotFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.dotNative): (DataFrame, DataFrame) = {
-    // Same multi-consumer diamond as incrementalMinhashDedupWithIndex:
-    // pin the O(batch·tables) bucket table so the signing pass runs once.
-    val banded = graft.functions.Knn.lshBucketTable(batch, idCol, vecCol,
-      tables, bits, dims, dotFn)
-      .select(col("vid").as("id"), col("t"), col("bucket"))
-      .localCheckpoint()
-    val idxHits = banded
-      .join(lshIndex.select(col("t"), col("bucket")), Seq("t", "bucket"),
-        "left_semi")
-      .select(col("id"))
-    val internal = banded
-      .withColumn("__minid",
-        min(col("id")).over(Window.partitionBy(col("t"), col("bucket"))))
-      .filter(col("id") > col("__minid"))
-      .select(col("id"))
-    val dropped = idxHits.union(internal).distinct()
-    val kept = batch.join(dropped.withColumnRenamed("id", idCol),
-      Seq(idCol), "left_anti")
-    val keptKeys = banded.join(dropped, Seq("id"), "left_anti")
-      .select(col("t"), col("bucket")).distinct()
-    (kept, keptKeys)
-  }
+        graft.functions.VectorFunctions.dotNative): (DataFrame, DataFrame) =
+    incrementalBucketDedup(batch, idCol,
+      graft.functions.Knn.lshBucketTable(batch, idCol, vecCol, tables, bits,
+        dims, dotFn).select(col("vid").as("id"), col("t"), col("bucket")),
+      lshIndex, Seq("t", "bucket"))
 
   /** STREAMING exact dedup: drop any document whose normalized-text
     * fingerprint was already emitted, with state bounded by the event-time
@@ -1086,40 +1040,6 @@ object Dedup {
     transform(sequence(lit(0), lit(k - 1)),
       seed => array_min(transform(shinglesCol, sh => hashFn(sh, seed))))
 
-  /** LSH candidate pairs from banded MinHash signatures: two docs are
-    * candidates iff some band of r rows hashes identically. With k = b*r,
-    * P(candidate) ≈ 1-(1-J^r)^b. Defaults b=8,r=4: J=0.9 → 0.9995 recall,
-    * while unrelated pairs (J≈0.1) collide at ~8·10⁻⁴ — r must be ≥4 when
-    * the corpus has high baseline similarity (small vocabularies), else
-    * random band collisions swamp verification (measured 218 s → 3 s at
-    * 5k docs going r=2 → r=4). */
-  def minhashCandidates(df: DataFrame, textCol: String, idCol: String,
-      shingleN: Int, bands: Int, rowsPerBand: Int): DataFrame = {
-    val k = bands * rowsPerBand
-    // Signature as k min-aggregates over the exploded shingle table: one
-    // hash-agg shuffle, and each shingle is hashed exactly k times.
-    // (The array-expression form of minhashSignature gets its shingle
-    // input re-inlined per seed by CollapseProject — measured 10× slower.)
-    val sh = shingleTable(df, textCol, idCol, shingleN)
-    val minCols = (0 until k).map(s =>
-      min(xxhash64(col("shingle"), lit(s))).as(s"__m$s"))
-    val sig = sh.groupBy("id").agg(minCols.head, minCols.tail: _*)
-      .select(col("id"),
-        array((0 until k).map(i => col(s"__m$i")): _*).as("sig"))
-    val banded = sig.select(col("id"),
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band"),
-            xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)))
-              .as("bh")))).as("bb"))
-      .select(col("id"), col("bb.band"), col("bb.bh"))
-    // merge hint: keep both sides as identical shuffle exchanges so the
-    // second is a ReusedExchange (see minhashPairs for the full story).
-    banded.as("x").join(banded.as("y").hint("merge"), Seq("band", "bh"))
-      .filter(col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-  }
-
   /** MinHash+LSH near-dup pairs, verified with exact Jaccard — the
     * standard candidate-then-verify pipeline, collapsed to THREE
     * shuffles: (1) collect each doc's distinct-shingle set, (2) the
@@ -1130,8 +1050,7 @@ object Dedup {
     * order-insensitive), never a join back to an exploded shingle
     * table. Signatures are computed from the materialized set column in
     * one fused loop (a plain attribute, so CollapseProject cannot
-    * re-inline the shingle computation per seed — the trap the
-    * aggregate formulation in [[minhashCandidates]] avoids). */
+    * re-inline the shingle computation per seed). */
   def minhashPairs(df: DataFrame, textCol: String, idCol: String,
       shingleN: Int = 3, threshold: Double = 0.8,
       bands: Int = 8, rowsPerBand: Int = 4,

@@ -52,27 +52,26 @@ object Knn {
       .select("id_a", "id_b", "cosine")
   }
 
-  /** IVF bucket assignment: nearest (by cosine) of C deterministic
-    * centroids — here the corpus vectors with the C smallest ids, a
-    * deterministic stand-in for sampled/trained centroids (k-means training
-    * is an offline step out of query scope). */
-  def ivfAssign(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: Int): DataFrame = {
-    val cents = corpus.orderBy(col(idCol)).limit(centroids)
+  /** The deterministic centroid stand-in: the `n` corpus vectors with
+    * the smallest ids as a (centroid_id, centv) table. Any engine
+    * reproduces it exactly, which is what lets the oracle replay every
+    * bucket choice; [[kmeans]] is the trained alternative. */
+  def firstCentroids(corpus: DataFrame, idCol: String, vecCol: String,
+      n: Int): DataFrame =
+    corpus.orderBy(col(idCol)).limit(n)
       .select(col(idCol).as("centroid_id"), col(vecCol).as("centv"))
-    assignWith(corpus, idCol, vecCol, cents)
-  }
 
-  /** Bucket assignment against a caller-provided (centroid_id, centv)
-    * table — e.g. [[kmeans]]-trained centroids. Same shuffle-free
-    * broadcast-argmin projection as [[ivfAssign]]. The default scorer is
+  /** IVF bucket assignment: each vector's nearest (by cosine) centroid
+    * of a (centroid_id, centv) table — [[firstCentroids]] or
+    * [[kmeans]]. The shuffle-free broadcast-argmin projection of
+    * [[assignBuckets]]. The default scorer is
     * the NATIVE cosine: inside the per-centroid transform lambda each
     * score is evaluated through ArrayTransform's interpreted path, where
     * the HOF-composed cosine walks three nested interpreted HOF trees
     * per centroid per row (~40µs/element measured) while the native
     * expression is one primitive loop — bit-identical results
     * (CosineSimilaritySpec), so oracle replays are unaffected. */
-  def assignWith(corpus: DataFrame, idCol: String, vecCol: String,
+  def ivfAssign(corpus: DataFrame, idCol: String, vecCol: String,
       cents: DataFrame,
       cosineFn: (Column, Column) => Column = VectorFunctions.cosineNative): DataFrame =
     assignBuckets(corpus.select(col(idCol).as("vid"), col(vecCol).as("v")),
@@ -146,9 +145,8 @@ object Knn {
         if (sampled.count() < centroids) all.localCheckpoint() else sampled
       }
     } else all.localCheckpoint()
-    val init = vecs.orderBy(col("vid")).limit(centroids)
-      .select(col("vid").as("centroid_id"), col("v").as("centv"))
-    trainLoop(vecs, init, iterations, replayable)
+    trainLoop(vecs, firstCentroids(vecs, "vid", "v", centroids), iterations,
+      replayable)
   }
 
   /** The 52-bit md5-prefix sample hash of the REPLAYABLE k-means tier
@@ -610,16 +608,15 @@ object Knn {
   /** Product-quantization codebooks as ONE broadcastable array row:
     * the vector space splits into `m` contiguous subspaces of dims/m
     * components; each subspace's codebook is the sub-vectors of the `k`
-    * smallest-id corpus vectors (the same deterministic stand-in for
-    * offline per-subspace k-means that [[ivfAssign]] uses, so any engine
-    * reproduces the books exactly). The flat array stores subspace j's
+    * smallest-id corpus vectors (the [[firstCentroids]] stand-in for
+    * offline per-subspace k-means, so any engine reproduces the books
+    * exactly). The flat array stores subspace j's
     * p-th centroid (p = 1..k, ordered by source id) at index j*k + p —
     * codes address centroids by RANK, never by raw id, so lookups are
     * pure arithmetic. */
   def pqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, k: Int, dims: Int): DataFrame = {
-    val sub = dims / m
-    require(m * sub == dims, s"m=$m must divide dims=$dims")
+    val sub = subspaceWidth(m, dims)
     // The flat books array is addressed with a FIXED stride of k
     // (index j*k + p in pqTopK): fewer than k corpus vectors would
     // silently mis-stride every subspace after the first, so fail
@@ -627,17 +624,13 @@ object Knn {
     val have = corpus.select(col(idCol)).limit(k).count()
     require(have == k,
       s"pqCodebooks needs >= $k corpus vectors for k=$k, found $have")
-    corpus.orderBy(col(idCol)).limit(k)
-      .select(col(idCol).as("cid"), VectorFunctions.toDouble(col(vecCol)).as("v"))
+    flatBooks(firstCentroids(corpus, idCol, vecCol, k)
+      .select(col("centroid_id").as("cid"),
+        VectorFunctions.toDouble(col("centv")).as("v"))
       .select(col("cid"), explode(sequence(lit(0), lit(m - 1))).as("j"),
         col("v"))
       .select(col("j"), col("cid"),
-        slice(col("v"), col("j") * sub + 1, lit(sub)).as("centv"))
-      .groupBy()
-      .agg(array_sort(collect_list(struct(col("j"), col("cid"), col("centv"))))
-        .as("__sorted"))
-      .select(transform(col("__sorted"), e => e.getField("centv"))
-        .as("books"))
+        slice(col("v"), col("j") * sub + 1, lit(sub)).as("centv")))
   }
 
   /** PQ codebooks TRAINED per subspace — the configuration FAISS-IVFPQ
@@ -646,7 +639,7 @@ object Knn {
     * deterministic smallest-id stand-ins. Same rank-addressed one-row
     * flat-array format (subspace j's p-th centroid at index j*k + p,
     * p ordered by the trained centroid's deterministic init id), so
-    * [[pqTopK]]/[[ivfPqWith]] consume either interchangeably.
+    * [[pqTopK]]/[[ivfPq]] consume either interchangeably.
     *
     * Scale: training is an OFFLINE step whose corpus cost is ONE count
     * plus ONE sampling scan (r14 review — the sample membership is a
@@ -663,8 +656,7 @@ object Knn {
   def pqCodebooksTrained(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, k: Int, dims: Int, iterations: Int = 3,
       trainPerCentroid: Int = 256): DataFrame = {
-    val sub = dims / m
-    require(m * sub == dims, s"m=$m must divide dims=$dims")
+    val sub = subspaceWidth(m, dims)
     val all = corpus.select(col(idCol).as("vid"),
       VectorFunctions.toDouble(col(vecCol)).as("v"))
     // One shared full-width sample (same Bernoulli hash prune as
@@ -680,7 +672,7 @@ object Knn {
         if (sampled.count() < k) all.localCheckpoint() else sampled
       }
     }
-    val subBooks = (0 until m).map { j =>
+    flatBooks((0 until m).map { j =>
       val subCorpus = pinned.select(col("vid"),
         slice(col("v"), j * sub + 1, sub).as("v"))
       val cents = kmeans(subCorpus, "vid", "v", k, iterations,
@@ -692,15 +684,89 @@ object Knn {
           "rank-addressed books array) — lower k or use pqCodebooks")
       cents.select(lit(j).as("j"), col("centroid_id").as("cid"),
         col("centv"))
-    }.reduce(_ unionAll _)
+    }.reduce(_ unionAll _))
+  }
+
+  private def subspaceWidth(m: Int, dims: Int): Int = {
+    val sub = dims / m
+    require(m * sub == dims, s"m=$m must divide dims=$dims")
+    sub
+  }
+
+  /** Fold (j, cid, centv) sub-centroid rows into the one-row flat
+    * `books` array: sorted by (subspace, centroid id), so subspace j's
+    * p-th centroid lands at index j*k + p. */
+  private def flatBooks(subBooks: DataFrame): DataFrame =
     subBooks.groupBy()
       .agg(array_sort(collect_list(struct(col("j"), col("cid"),
         col("centv")))).as("__sorted"))
       .select(transform(col("__sorted"), e => e.getField("centv"))
         .as("books"))
+
+  /** Pin a one-row `books` table — it feeds the encoding projection AND
+    * the query scorer, and an unpinned trained input would re-run its
+    * k-means chain per branch — and check its geometry. The ADC scorer
+    * addresses the flat array at j*codebook + code, so books built for
+    * a different (m, codebook) mis-stride SILENTLY: out-of-range
+    * element_at yields null, nulls swallow every score, and the top-k
+    * degrades to an arbitrary ranking with no error. Both builders fail
+    * loudly at build time; the consuming side must too. One head() on a
+    * pinned one-row frame — negligible. */
+  private def pinBooks(books: DataFrame, m: Int, codebook: Int): DataFrame = {
+    val pinned = books.localCheckpoint()
+    val nBooks = pinned.select(size(col("books"))).head.getInt(0)
+    require(nBooks == m * codebook,
+      s"books array has $nBooks sub-centroids, need m*codebook = " +
+        s"${m * codebook} (m=$m, codebook=$codebook) — books built for " +
+        "a different PQ geometry")
+    pinned
   }
 
-  /** PQ top-k by asymmetric distance: corpus vectors are stored as m
+  /** PQ codes of the double vector `v` against the broadcast `books`
+    * column: per subspace, the rank of the nearest sub-centroid (L2,
+    * ties to the smaller rank). Argmin metric: |b|² - 2a·b, the L2
+    * expansion with the per-(vector, subspace) constant |a|² dropped — a
+    * uniform shift that preserves the ordering AND the ties, so the
+    * chosen code is the true L2 argmin. Two native-dot kernels per
+    * probe, no per-probe difference arrays (a zip_with/aggregate form
+    * measured 4x slower: HOF lambdas evaluate per-element expression
+    * trees). The oracle replays this exact expression, so left-to-right
+    * rounding matches bit-for-bit. Sub-slices are shared by nesting
+    * transforms: the inner transform materializes each vector's m
+    * sub-vectors ONCE per row; the outer (element, index) lambda then
+    * probes all k centroids per subspace. */
+  private def pqCodes(v: Column, m: Int, codebook: Int, sub: Int,
+      dotFn: (Column, Column) => Column): Column = {
+    def score2(a: Column, b: Column): Column =
+      dotFn(b, b) - lit(2.0) * dotFn(a, b)
+    transform(
+      transform(sequence(lit(0), lit(m - 1)), j =>
+        slice(v, j * sub + 1, lit(sub))),
+      (sv, j) => array_min(transform(sequence(lit(1), lit(codebook)),
+        p => struct(
+          score2(sv, element_at(col("books"), j * codebook + p)).as("d2"),
+          p.as("p")))).getField("p"))
+  }
+
+  /** ADC score of the exact query vector `qv` against the `codes`
+    * column's reconstruction from the broadcast `books` column:
+    * Σ_j q_j · books[j][code_j], an ordered Σ of sub-dots computed as a
+    * dot against ones, so both the inner q_j·centv and the outer fold
+    * run left-to-right and any engine replays it bit-for-bit. */
+  private def adcScore(qv: Column, m: Int, codebook: Int, sub: Int,
+      dotFn: (Column, Column) => Column): Column = {
+    val ones = array((0 until m).map(_ => lit(1.0)): _*)
+    dotFn(
+      transform(sequence(lit(0), lit(m - 1)), j =>
+        dotFn(slice(qv, j * sub + 1, lit(sub)),
+          element_at(col("books"),
+            j * codebook + element_at(col("codes"), j + 1)))),
+      ones)
+  }
+
+  /** PQ top-k by asymmetric distance against caller-provided `books`
+    * ([[pqCodebooks]] or [[pqCodebooksTrained]], built for this `m` and
+    * `codebook`): corpus vectors are stored as m
     * one-byte-ish codes (the rank of the nearest sub-centroid per
     * subspace, L2, ties to the smaller rank); queries stay exact and
     * score against code RECONSTRUCTIONS — score(q, x) = Σ_j q_j ·
@@ -712,61 +778,43 @@ object Knn {
     * 16x smaller than the float vector at m=16/dims=64 — which is the
     * point: the 100 TB corpus scan reads codes, never raw vectors. The
     * only shuffle is the per-query top-k window, cost ∝ |Q|×|N| scored
-    * pairs like [[bruteForce]] (bucket with [[ivfWith]]/[[lshCosine]] to
+    * pairs like [[bruteForce]] (bucket with [[ivf]]/[[lshCosine]] to
     * cut candidates; PQ is the storage/bandwidth leg, not the pruning
     * leg). */
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, m: Int = 16, codebook: Int = 16,
-      dims: Int = 64,
+      vecCol: String, k: Int, books: DataFrame, m: Int = 16,
+      codebook: Int = 16, dims: Int = 64,
       dotFn: (Column, Column) => Column = VectorFunctions.dotNative): DataFrame = {
-    val sub = dims / m
-    require(m * sub == dims, s"m=$m must divide dims=$dims")
-    // One-row codebook, consumed by the coded projection AND the query
-    // scorer: pin so the codebook build runs once.
-    val books = pqCodebooks(corpus, idCol, vecCol, m, codebook, dims)
-      .localCheckpoint()
-    // Argmin metric: |b|² - 2a·b, the L2 expansion with the per-(vector,
-    // subspace) constant |a|² dropped — a uniform shift that preserves
-    // the ordering AND the ties, so the chosen code is the true L2
-    // argmin. Two native-dot kernels per probe, no per-probe difference
-    // arrays (a zip_with/aggregate form measured 4x slower: HOF lambdas
-    // evaluate per-element expression trees). The oracle replays this
-    // exact expression, so left-to-right rounding matches bit-for-bit.
-    def score2(a: Column, b: Column): Column =
-      dotFn(b, b) - lit(2.0) * dotFn(a, b)
-    // Sub-slices are shared by nesting transforms: the inner transform
-    // materializes each vector's m sub-vectors ONCE per row; the outer
-    // (element, index) lambda then probes all k centroids per subspace.
-    val coded = corpus.crossJoin(broadcast(books))
+    val sub = subspaceWidth(m, dims)
+    val pinned = pinBooks(books, m, codebook)
+    val coded = corpus.crossJoin(broadcast(pinned))
       .select(col(idCol).as("vid"),
-        transform(
-          transform(sequence(lit(0), lit(m - 1)), j =>
-            slice(VectorFunctions.toDouble(col(vecCol)), j * sub + 1,
-              lit(sub))),
-          (sv, j) => array_min(transform(sequence(lit(1), lit(codebook)),
-            p => struct(
-              score2(sv, element_at(col("books"), j * codebook + p))
-                .as("d2"),
-              p.as("p")))).getField("p")).as("codes"))
+        pqCodes(VectorFunctions.toDouble(col(vecCol)), m, codebook, sub,
+          dotFn).as("codes"))
     val q = queries
       .select(col(idCol).as("query_id"),
         VectorFunctions.toDouble(col(vecCol)).as("qv"))
-    val ones = array((0 until m).map(_ => lit(1.0)): _*)
     val scored = coded.join(broadcast(q), col("query_id") =!= col("vid"))
-      .crossJoin(broadcast(books))
-      // Ordered Σ_j of sub-dots, again as a dot against ones: both the
-      // inner q_j·centv and the outer fold run left-to-right.
-      .withColumn("score", dotFn(
-        transform(sequence(lit(0), lit(m - 1)), j =>
-          dotFn(slice(col("qv"), j * sub + 1, lit(sub)),
-            element_at(col("books"),
-              j * codebook + element_at(col("codes"), j + 1)))),
-        ones))
+      .crossJoin(broadcast(pinned))
+      .withColumn("score", adcScore(col("qv"), m, codebook, sub, dotFn))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("vid"))
     scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
       .select(col("query_id"), col("vid").as("neighbor_id"), col("score"),
         col("rk"))
+  }
+
+  /** Each query's `nprobe` nearest buckets by cosine of `qvec` against
+    * the broadcast centroid table: (query_id, qv, bucket). */
+  private def probeBuckets(q: DataFrame, qvec: String, cents: DataFrame,
+      nprobe: Int, cosineFn: (Column, Column) => Column): DataFrame = {
+    val probes = q.crossJoin(broadcast(cents))
+      .withColumn("sim", cosineFn(col(qvec), col("centv")))
+    val wp = Window.partitionBy(col("query_id"))
+      .orderBy(col("sim").desc, col("centroid_id"))
+    probes.withColumn("rk", row_number().over(wp))
+      .filter(col("rk") <= nprobe)
+      .select(col("query_id"), col("qv"), col("centroid_id").as("bucket"))
   }
 
   /** IVF+PQ top-k — the standard billion-vector ANN architecture (FAISS
@@ -782,28 +830,12 @@ object Knn {
     * probe join broadcasts the query side; the only shuffle is the
     * per-query top-k).
     *
-    * Same deterministic stand-ins as the parents (centroids and
-    * codebooks from the smallest-id vectors) so every engine replays
-    * bucket and code choices exactly; scoring is the ADC
-    * sequential-dot form of [[pqTopK]], bit-replayable. */
-  def ivfPq(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, centroids: Int, nprobe: Int,
-      m: Int = 16, codebook: Int = 16, dims: Int = 64,
-      cosineFn: (Column, Column) => Column = VectorFunctions.cosineNative,
-      dotFn: (Column, Column) => Column = VectorFunctions.dotNative,
-      refine: Int = 0): DataFrame =
-    ivfPqWith(corpus, queries, idCol, vecCol, k,
-      corpus.orderBy(col(idCol)).limit(centroids)
-        .select(col(idCol).as("centroid_id"), col(vecCol).as("centv")),
-      nprobe, m, codebook, dims, cosineFn, dotFn, refine = refine)
-
-  /** [[ivfPq]] against caller-provided centroids (e.g. [[kmeans]]-
-    * trained — the configuration FAISS actually ships) and optionally
-    * caller-provided codebooks ([[pqCodebooksTrained]]); `ivfPq`'s
-    * deterministic smallest-id stand-ins are the defaults, so
-    * `ivfPqWith(ivfPq's own cents)` ≡ `ivfPq` (KnnSpec-pinned). Same
-    * one-corpus-pass (bucket, codes) plan, same broadcast probe join,
-    * same ADC scoring — only the offline training artifacts change.
+    * `cents` and `books` are the offline training artifacts, passed in:
+    * [[firstCentroids]] and [[pqCodebooks]] are the deterministic
+    * smallest-id stand-ins every engine replays exactly; [[kmeans]] and
+    * [[pqCodebooksTrained]] are the configuration FAISS actually ships.
+    * Scoring is the ADC sequential-dot form of [[pqTopK]],
+    * bit-replayable.
     *
     * `refine > 0` adds the EXACT RE-RANK leg (FAISS IndexRefineFlat —
     * r14, probe 23b): ADC scores only SELECT the top-`refine`
@@ -822,73 +854,36 @@ object Knn {
     * id-keyed store) the same broadcast-semi shape becomes |Q|·refine
     * point lookups; what the DataFrame plan guarantees today is only
     * "no shuffle, bounded re-rank rows". With `refine ≥` the probed
-    * candidate count this degenerates to [[ivfWith]] exactly
+    * candidate count this degenerates to [[ivf]] exactly
     * (KnnSpec-pinned law). */
-  def ivfPqWith(corpus: DataFrame, queries: DataFrame, idCol: String,
+  def ivfPq(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, cents: DataFrame, nprobe: Int,
-      m: Int = 16, codebook: Int = 16, dims: Int = 64,
+      books: DataFrame, m: Int = 16, codebook: Int = 16, dims: Int = 64,
       cosineFn: (Column, Column) => Column = VectorFunctions.cosineNative,
       dotFn: (Column, Column) => Column = VectorFunctions.dotNative,
-      booksOpt: Option[DataFrame] = None, refine: Int = 0): DataFrame = {
-    val sub = dims / m
-    require(m * sub == dims, s"m=$m must divide dims=$dims")
+      refine: Int = 0): DataFrame = {
+    val sub = subspaceWidth(m, dims)
     // Pin both tiny training artifacts: each feeds two+ plan branches,
     // and an unpinned trained input would re-run its whole k-means
-    // chain per branch (the ivfWith rationale).
+    // chain per branch (the ivf rationale).
     val cents0 = cents.localCheckpoint()
-    val books = booksOpt
-      .getOrElse(pqCodebooks(corpus, idCol, vecCol, m, codebook, dims))
-      .localCheckpoint()
-    // Geometry guard on caller-provided books (r14 review): the ADC
-    // scorer addresses the flat array at j*codebook + code, so books
-    // built for a different (m, codebook) mis-stride SILENTLY —
-    // out-of-range element_at yields null, nulls swallow every score,
-    // and the top-k degrades to an arbitrary ranking with no error.
-    // Both builders fail loudly at build time; consume-side must too.
-    // One head() on a pinned one-row frame — negligible.
-    val nBooks = books.select(size(col("books"))).head.getInt(0)
-    require(nBooks == m * codebook,
-      s"books array has $nBooks sub-centroids, need m*codebook = " +
-        s"${m * codebook} (m=$m, codebook=$codebook) — books built for " +
-        "a different PQ geometry")
-    def score2(a: Column, b: Column): Column =
-      dotFn(b, b) - lit(2.0) * dotFn(a, b)
+    val pinned = pinBooks(books, m, codebook)
     // One corpus pass: bucket assignment + PQ encoding, raw vector
     // dropped at the end of the projection — the at-rest representation
     // is (vid, bucket, m codes).
-    val coded = assignWith(corpus, idCol, vecCol, cents0, cosineFn)
-      .crossJoin(broadcast(books))
+    val coded = ivfAssign(corpus, idCol, vecCol, cents0, cosineFn)
+      .crossJoin(broadcast(pinned))
       .select(col("vid"), col("bucket"),
-        transform(
-          transform(sequence(lit(0), lit(m - 1)), j =>
-            slice(VectorFunctions.toDouble(col("v")), j * sub + 1,
-              lit(sub))),
-          (sv, j) => array_min(transform(sequence(lit(1), lit(codebook)),
-            p => struct(
-              score2(sv, element_at(col("books"), j * codebook + p))
-                .as("d2"),
-              p.as("p")))).getField("p")).as("codes"))
-    // nprobe nearest buckets per query, exactly as in [[ivfWith]].
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("qraw"),
-      VectorFunctions.toDouble(col(vecCol)).as("qv"))
-    val probes = q.crossJoin(broadcast(cents0))
-      .withColumn("sim", cosineFn(col("qraw"), col("centv")))
-    val wp = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("centroid_id"))
-    val probed = probes.withColumn("rk", row_number().over(wp))
-      .filter(col("rk") <= nprobe)
-      .select(col("query_id"), col("qv"), col("centroid_id").as("bucket"))
-    val ones = array((0 until m).map(_ => lit(1.0)): _*)
+        pqCodes(VectorFunctions.toDouble(col("v")), m, codebook, sub,
+          dotFn).as("codes"))
+    val probed = probeBuckets(
+      queries.select(col(idCol).as("query_id"), col(vecCol).as("qraw"),
+        VectorFunctions.toDouble(col(vecCol)).as("qv")),
+      "qraw", cents0, nprobe, cosineFn)
     val scored = coded.join(broadcast(probed), Seq("bucket"))
       .filter(col("query_id") =!= col("vid"))
-      .crossJoin(broadcast(books))
-      .withColumn("score", dotFn(
-        transform(sequence(lit(0), lit(m - 1)), j =>
-          dotFn(slice(col("qv"), j * sub + 1, lit(sub)),
-            element_at(col("books"),
-              j * codebook + element_at(col("codes"), j + 1)))),
-        ones))
+      .crossJoin(broadcast(pinned))
+      .withColumn("score", adcScore(col("qv"), m, codebook, sub, dotFn))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("vid"))
     if (refine <= 0)
@@ -919,47 +914,25 @@ object Knn {
     }
   }
 
-  /** IVF top-k with naive deterministic centroids. */
+  /** IVF top-k against a (centroid_id, centv) table — [[firstCentroids]]
+    * or [[kmeans]]-trained (better-balanced buckets → better recall at
+    * the same nprobe): search only the `nprobe` buckets nearest to each
+    * query. Assignment is the shuffle-free [[assignBuckets]]
+    * projection; the only shuffles left are the final per-query top-k
+    * (|Q| partitions) and none for the corpus itself. */
   def ivf(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, centroids: Int, nprobe: Int,
-      cosineFn: (Column, Column) => Column = VectorFunctions.cosineNative): DataFrame = {
-    val cents = corpus.orderBy(col(idCol)).limit(centroids)
-      .select(col(idCol).as("centroid_id"), col(vecCol).as("centv"))
-    ivfWith(corpus, queries, idCol, vecCol, k, cents, nprobe, cosineFn)
-  }
-
-  /** IVF top-k with k-means-trained centroids (better-balanced buckets →
-    * better recall at the same nprobe). */
-  def ivfTrained(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, centroids: Int, nprobe: Int,
-      iterations: Int = 3): DataFrame =
-    ivfWith(corpus, queries, idCol, vecCol, k,
-      kmeans(corpus, idCol, vecCol, centroids, iterations), nprobe)
-
-  /** IVF top-k against a provided (centroid_id, centv) table: search only
-    * the `nprobe` buckets nearest to each query. Assignment is the
-    * shuffle-free [[assignBuckets]] projection; the only shuffles left
-    * are the final per-query top-k (|Q| partitions) and none for the
-    * corpus itself. */
-  def ivfWith(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, cents: DataFrame, nprobe: Int,
       cosineFn: (Column, Column) => Column = VectorFunctions.cosineNative): DataFrame = {
     // Pin the (tiny, <=centroids-row) table: it feeds BOTH the
     // assignment fold and the probe broadcast, and an unpinned plan
-    // re-executes whatever produced it per branch — for ivfTrained that
-    // is the ENTIRE k-means iteration chain, corpus scans included.
+    // re-executes whatever produced it per branch — for trained
+    // centroids that is the ENTIRE k-means iteration chain, corpus
+    // scans included.
     val centsPinned = cents.localCheckpoint()
-    val assigned = assignBuckets(
-      corpus.select(col(idCol).as("vid"), col(vecCol).as("v")), centsPinned,
-      cosineFn)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val probes = q.crossJoin(broadcast(centsPinned))
-      .withColumn("sim", cosineFn(col("qv"), col("centv")))
-    val wp = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("centroid_id"))
-    val probed = probes.withColumn("rk", row_number().over(wp))
-      .filter(col("rk") <= nprobe)
-      .select(col("query_id"), col("qv"), col("centroid_id").as("bucket"))
+    val assigned = ivfAssign(corpus, idCol, vecCol, centsPinned, cosineFn)
+    val probed = probeBuckets(
+      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
+      "qv", centsPinned, nprobe, cosineFn)
     val scored = assigned.join(broadcast(probed), Seq("bucket"))
       .filter(col("query_id") =!= col("vid"))
       .withColumn("cosine", cosineFn(col("qv"), col("v")))

@@ -53,13 +53,6 @@ object LangModel {
       .otherwise(transform(sequence(lit(1), size(chars) - 1),
         i => concat(element_at(chars, i), element_at(chars, i + 1))))
 
-  /** Adjacent character bigrams of the lowercased text — spaces
-    * included: word boundaries are among the most informative character
-    * contexts for langid. Reference composition for single-column use;
-    * the corpus paths below project [[charsOf]] FIRST (see
-    * [[bigramsFromChars]]'s perf rule). */
-  def charBigrams(text: Column): Column = bigramsFromChars(charsOf(text))
-
   /** md5-prefix bucket — the [[graft.ops.Dsir]] convention (28 bits
     * folded mod `buckets`; oracle: ('0x'||substr(md5(g),1,7))::BIGINT % B). */
   private def bucketOf(gram: Column, buckets: Int): Column =

@@ -7,8 +7,8 @@ import org.apache.spark.sql.expressions.Aggregator
 
 /** MinHash signature as a typed Aggregator (SURVEY §4.3 item 3): one pass
   * over (id, shingle) rows, a k-long mutable min buffer, elementwise-min
-  * merge — the TypedImperativeAggregate-style alternative to the k
-  * min-column aggregation in [[graft.dedup.Dedup.minhashCandidates]].
+  * merge — the TypedImperativeAggregate-style alternative to a k
+  * min-column aggregation (`groupBy(id).agg(min(xxhash64(shingle, s))…)`).
   *
   * Hashing: XXH64 of the shingle's UTF-8 bytes, salted by the hash-function
   * index as the seed (same family as Spark's `xxhash64`, via the lz4-java

@@ -49,9 +49,4 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = read(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = read(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = read(s, d, "embeddings")
-
-  /** Register every fixture table as a temp view so `spark.sql` works as the
-    * interactive surface (SURVEY §3.3 entry point C). */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => read(spark, sfDir, n).createOrReplaceTempView(n))
 }

@@ -301,7 +301,7 @@ object Sampling {
     // Pinned: the indexed table feeds BOTH the draws branch and the
     // negative-fetch side of the join — unpinned, the corpus-wide
     // global-index sort would re-execute per branch (the same diamond
-    // semanticDedupAssigned and ivfWith pin).
+    // semanticDedup and Knn.ivf pin).
     val (unpinned, n) = ScaleOps.withGlobalIndex(
       df.select(col(idCol)).where(col(idCol).isNotNull),
       Seq(col(idCol)), "__idx")

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import java.util.concurrent.atomic.AtomicReference
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -11,6 +9,7 @@ import graft.model.Schemas
 import graft.ops.RefOps
 import graft.sink.Upsert
 import graft.sources.{RestScan, Transport}
+import graft.util.Overlap
 
 /** The reference's entire dataflow (SURVEY §3.1) as one lazy Spark
   * program: sitemap → products → shop_info → ratings → staged upserts into
@@ -242,11 +241,9 @@ object SendoPipeline {
     * The rating load and the shop → product load share no table, so they
     * run side by side as the reference's DAG runs them (D2/D3): the
     * rating merge on a thread started here, the shop chain on the
-    * caller's thread. A fresh thread, not a pooled one, inherits Spark's
-    * thread-local properties (job group, scheduler pool) from this
-    * caller rather than from whoever created a pool thread. Both
-    * branches are joined before `run` returns or throws; the first
-    * failure is rethrown, the other attached as suppressed. A failed
+    * caller's thread ([[graft.util.Overlap.both]]: both branches are
+    * joined before `run` returns or throws; the first failure is
+    * rethrown, the other attached as suppressed). A failed
     * merge leaves its table as it was (the stage is never published), so
     * a re-run converges. */
   def run(spark: SparkSession, transport: Transport,
@@ -256,21 +253,13 @@ object SendoPipeline {
     val shops = shopInfos(spark, prods, transport).persist()    // 2 consumers
     val rats = ratings(spark, shops, transport)
 
-    val failure = new AtomicReference[Throwable]()
-    def record(e: Throwable): Unit =
-      if (!failure.compareAndSet(null, e) && (failure.get ne e))
-        failure.get.addSuppressed(e)
-
-    // Rating load (etl.py:170-203). The reference's 5-way fan-out (D2/U5)
-    // is subsumed by partition parallelism inside one merge.
-    val ratingLoad = new Thread(() =>
-      try mergeTable(spark, warehouseDir, "rating", Schemas.rating, rats, "rating_id")
-      catch { case e: Throwable => record(e) },
-      "sendo-rating-load")
-    ratingLoad.start()
-
-    // Shop load, then RI-filtered product load (etl.py:206-281):
-    try {
+    // Rating load (etl.py:170-203) on its own thread; shop load, then
+    // RI-filtered product load (etl.py:206-281) on the caller's. The
+    // reference's 5-way rating fan-out (D2/U5) is subsumed by partition
+    // parallelism inside one merge.
+    try Overlap.both("sendo-rating-load") {
+      mergeTable(spark, warehouseDir, "rating", Schemas.rating, rats, "rating_id")
+    } {
       mergeTable(spark, warehouseDir, "shop_info", Schemas.shopInfo, shops, "shop_id")
       val dbShopIds = readTable(spark, warehouseDir, "shop_info", Schemas.shopInfo)
         .select("shop_id") // S8 read-back
@@ -278,12 +267,7 @@ object SendoPipeline {
       val rifProducts = RefOps.riFilter(validShops, "shop_id")(prods)   // P9
       mergeTable(spark, warehouseDir, "product_detail", Schemas.productDetail,
         rifProducts, "product_id")
-    } catch { case e: Throwable => record(e) }
-    finally {
-      ratingLoad.join()
-      prods.unpersist(); shops.unpersist()
-    }
-    Option(failure.get).foreach(e => throw e)
+    } finally { prods.unpersist(); shops.unpersist() }
 
     Map(
       "shop_info" -> readTable(spark, warehouseDir, "shop_info", Schemas.shopInfo),

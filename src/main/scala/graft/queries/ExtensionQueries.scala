@@ -696,7 +696,7 @@ object ExtensionQueries extends graft.QueryModule {
       graft.dedup.Dedup.incrementalEmbeddingDedup(batch,
           graft.dedup.Dedup.embeddingLshIndex(corpus, "vec_id",
             "embedding", dims = 64),
-          "vec_id", "embedding", dims = 64)
+          "vec_id", "embedding", dims = 64)._1
         .select($"vec_id")
         .orderBy($"vec_id")
     },
@@ -706,8 +706,10 @@ object ExtensionQueries extends graft.QueryModule {
     // keep-lowest-id survivors. Full assign→pair→drop pipeline replayed
     // by the oracle.
     "dedup_semantic" -> { (s, dir) =>
-      Dedup.semanticDedup(Tables.embeddings(s, dir), "vec_id", "embedding",
-        centroids = 16, threshold = 0.4, graft.GraftFunctions.cosineSim)
+      val emb = Tables.embeddings(s, dir)
+      Dedup.semanticDedup(emb, "vec_id", "embedding",
+        Knn.firstCentroids(emb, "vec_id", "embedding", 16),
+        threshold = 0.4, graft.GraftFunctions.cosineSim)
         .orderBy(col("vid"))
     },
 
@@ -724,9 +726,10 @@ object ExtensionQueries extends graft.QueryModule {
       val emb = Tables.embeddings(s, dir)
       val k = math.max(16,
         math.ceil(math.sqrt(emb.count().toDouble)).toInt)
-      Dedup.semanticDedupTrained(emb, "vec_id", "embedding",
-        centroids = k, iterations = 3, threshold = 0.4,
-        graft.GraftFunctions.cosineSim, replayable = true)
+      Dedup.semanticDedup(emb, "vec_id", "embedding",
+        Knn.kmeans(emb, "vec_id", "embedding", k, iterations = 3,
+          replayable = true),
+        threshold = 0.4, graft.GraftFunctions.cosineSim)
         .orderBy(col("vid"))
     },
 
@@ -742,9 +745,10 @@ object ExtensionQueries extends graft.QueryModule {
       val emb = Tables.embeddings(s, dir)
       val k = math.max(16,
         math.ceil(math.sqrt(emb.count().toDouble)).toInt)
-      Dedup.semanticDedupTrained(emb, "vec_id", "embedding",
-        centroids = k, iterations = 3, threshold = 0.4,
-        graft.GraftFunctions.cosineSim, replayable = false)
+      Dedup.semanticDedup(emb, "vec_id", "embedding",
+        Knn.kmeans(emb, "vec_id", "embedding", k, iterations = 3,
+          replayable = false),
+        threshold = 0.4, graft.GraftFunctions.cosineSim)
         .orderBy(col("vid"))
     },
 
@@ -827,9 +831,10 @@ object ExtensionQueries extends graft.QueryModule {
     "knn_ivf_topk" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       // Corpus-side spread (r14, guide §2.5 — the knn_cosine_topk note).
-      Knn.ivf(graft.util.Spread.spreadInput(emb, col("vec_id")),
-        emb.filter(col("vec_id") < 5),
-        "vec_id", "embedding", k = 10, centroids = 16, nprobe = 4,
+      val corpus = graft.util.Spread.spreadInput(emb, col("vec_id"))
+      Knn.ivf(corpus, emb.filter(col("vec_id") < 5),
+        "vec_id", "embedding", k = 10,
+        Knn.firstCentroids(corpus, "vec_id", "embedding", 16), nprobe = 4,
         cosineFn = graft.GraftFunctions.cosineSim)
         .orderBy(col("query_id"), col("rk"))
     },
@@ -891,7 +896,8 @@ object ExtensionQueries extends graft.QueryModule {
     "knn_pq_topk" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       Knn.pqTopK(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-        k = 10, m = 16, codebook = 16, dims = 64,
+        k = 10, Knn.pqCodebooks(emb, "vec_id", "embedding", 16, 16, 64),
+        m = 16, codebook = 16, dims = 64,
         dotFn = graft.GraftFunctions.dotProduct)
         .orderBy(col("query_id"), col("rk"))
     },
@@ -904,10 +910,12 @@ object ExtensionQueries extends graft.QueryModule {
     "knn_ivfpq_topk" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       // Corpus-side spread (r14, guide §2.5 — the knn_cosine_topk note).
-      Knn.ivfPq(graft.util.Spread.spreadInput(emb, col("vec_id")),
-        emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-        k = 10, centroids = 16, nprobe = 4, m = 16, codebook = 16,
-        dims = 64, cosineFn = graft.GraftFunctions.cosineSim,
+      val corpus = graft.util.Spread.spreadInput(emb, col("vec_id"))
+      Knn.ivfPq(corpus, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
+        k = 10, Knn.firstCentroids(corpus, "vec_id", "embedding", 16),
+        nprobe = 4, Knn.pqCodebooks(corpus, "vec_id", "embedding", 16, 16, 64),
+        m = 16, codebook = 16, dims = 64,
+        cosineFn = graft.GraftFunctions.cosineSim,
         dotFn = graft.GraftFunctions.dotProduct)
         .orderBy(col("query_id"), col("rk"))
     },
@@ -926,10 +934,12 @@ object ExtensionQueries extends graft.QueryModule {
     "knn_ivfpq_refined_topk" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       // Corpus-side spread (r14, guide §2.5 — the knn_cosine_topk note).
-      Knn.ivfPq(graft.util.Spread.spreadInput(emb, col("vec_id")),
-        emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-        k = 10, centroids = 16, nprobe = 4, m = 16, codebook = 16,
-        dims = 64, cosineFn = graft.GraftFunctions.cosineSim,
+      val corpus = graft.util.Spread.spreadInput(emb, col("vec_id"))
+      Knn.ivfPq(corpus, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
+        k = 10, Knn.firstCentroids(corpus, "vec_id", "embedding", 16),
+        nprobe = 4, Knn.pqCodebooks(corpus, "vec_id", "embedding", 16, 16, 64),
+        m = 16, codebook = 16, dims = 64,
+        cosineFn = graft.GraftFunctions.cosineSim,
         dotFn = graft.GraftFunctions.dotProduct, refine = 50)
         .orderBy(col("query_id"), col("rk"))
     },
@@ -991,7 +1001,8 @@ object ExtensionQueries extends graft.QueryModule {
         .select(col("query_id"), col("neighbor_id"))
       val methods =
         ids(Knn.ivf(emb, qs, "vec_id", "embedding", k = 10,
-          centroids = 16, nprobe = 4, cosineFn = cos), "ivf")
+          Knn.firstCentroids(emb, "vec_id", "embedding", 16), nprobe = 4,
+          cosineFn = cos), "ivf")
         .union(ids(Knn.lshCosine(emb, qs, "vec_id", "embedding", k = 10,
           dims = 64, bits = lshBits, cosineFn = cos, dotFn = dot,
           probes = 0), "lsh"))
@@ -999,12 +1010,15 @@ object ExtensionQueries extends graft.QueryModule {
           dims = 64, bits = lshBits, cosineFn = cos, dotFn = dot,
           probes = Knn.autoProbes(lshBits)), "lsh_mp"))
         .union(ids(Knn.pqTopK(emb, qs, "vec_id", "embedding", k = 10,
+          Knn.pqCodebooks(emb, "vec_id", "embedding", 16, 16, 64),
           m = 16, codebook = 16, dims = 64, dotFn = dot), "pq"))
         .union(ids(Knn.bruteForceQuantized(emb, qs, "vec_id", "embedding",
           10, dotFn = dot), "sq"))
         .union(ids(Knn.ivfPq(emb, qs, "vec_id", "embedding", k = 10,
-          centroids = 16, nprobe = 4, m = 16, codebook = 16, dims = 64,
-          cosineFn = cos, dotFn = dot), "ivfpq"))
+          Knn.firstCentroids(emb, "vec_id", "embedding", 16), nprobe = 4,
+          Knn.pqCodebooks(emb, "vec_id", "embedding", 16, 16, 64),
+          m = 16, codebook = 16, dims = 64, cosineFn = cos, dotFn = dot),
+          "ivfpq"))
       val grid = methods.select("method").distinct()
       // Every (method, exact-neighbor) cell exists via the broadcast
       // method grid, so a zero-overlap query reports recall 0.0 instead
@@ -1475,7 +1489,7 @@ object ExtensionQueries extends graft.QueryModule {
       Dedup.incrementalMinhashDedup(batch,
           Dedup.minhashBandIndex(corpus, "text", "doc_id",
             family = Dedup.md5AffineFamily),
-          "text", "doc_id", family = Dedup.md5AffineFamily)
+          "text", "doc_id", family = Dedup.md5AffineFamily)._1
         .select($"doc_id", $"source")
         .orderBy($"doc_id")
     },

@@ -28,7 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Output schema: (key string, page int, body string). One InputPartition
   * per `keysPerPartition` keys — partition planning mirrors the
   * reference's per-key fetch loops but distributes them; the transport is
-  * constructed per partition reader (connection reuse, S6 note).
+  * resolved once per partition reader, never per row (S6 note), though
+  * [[HttpTransport]] itself opens a connection per request.
   * Column pruning (SupportsPushDownRequiredColumns) reaches the reader:
   * un-projected columns are never materialized into rows — though the
   * fetch itself always happens, since pagination needs the body to find
@@ -243,8 +244,8 @@ private[sources] case class RestReaderFactory(urlTemplate: String,
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val keys = partition.asInstanceOf[RestInputPartition].keys
-    // One transport per partition reader: connection reuse per partition,
-    // never per row (SURVEY §2.1 S6 scale note).
+    // One transport per partition reader, never per row (SURVEY §2.1 S6
+    // scale note); HttpTransport still opens a connection per request.
     val transport = TransportRegistry.resolve(transportName)
     val isLast: String => Boolean = terminator match {
       case "rating" => RestScan.ratingLastPage

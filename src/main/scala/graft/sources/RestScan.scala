@@ -7,8 +7,10 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * The reference runs every fetch loop on a single process
   * (reference dags/etl.py:50-64, 89-96, 131-145); here each scan KEY
   * (sub-category, shop id, …) is a row of a keys Dataset, and fetching runs
-  * in `mapPartitions` on executors — connection/transport state is reused
-  * per partition, never per row, and never on the driver. At 1000
+  * in `mapPartitions` on executors, never on the driver. The transport
+  * instance ships once per partition; [[HttpTransport]] still closes its
+  * connection after every request (measured cheaper than keep-alive
+  * against a loopback origin, see its doc). At 1000
   * executors the keys DataFrame is simply repartitioned to spread origin
   * load; retry and rate limiting live inside [[Transport]].
   *

@@ -17,7 +17,8 @@ trait Transport extends Serializable {
   * (i.e. per session), replicating the reference's import-time
   * `random.choice(USER_AGENTS)` (reference dags/etl.py:11-22, D6) — not
   * per request. Bounded retry with linear backoff mirrors the Airflow
-  * task retry policy (etl.py:288-289, D4) at fetch granularity.
+  * task retry policy (etl.py:288-289, D4) at fetch granularity: 5xx,
+  * 429 and I/O errors are retried, any other 4xx fails at once.
   *
   * `rateLimitMs` spaces requests per partition so a 1000-executor
   * fan-out cannot hammer the origin.
@@ -59,8 +60,13 @@ class HttpTransport(
         conn.setReadTimeout(readTimeoutMs)
         try {
           val code = conn.getResponseCode
-          if (code >= 500) throw new IOException(s"HTTP $code for $url")
-          // 4xx is not transient: retrying a 404/403 just burns
+          // 429 (throttled) is transient like 5xx. Thrown as a client
+          // error it would read as a stream key's terminator
+          // (RestStreamReaderFactory), and the throttled page would be
+          // skipped for good.
+          if (code >= 500 || code == 429)
+            throw new IOException(s"HTTP $code for $url")
+          // Any other 4xx is not transient: retrying a 404/403 just burns
           // maxRetries×backoff per permanently-failing URL (and
           // getInputStream would throw IOException for it, which the
           // retry loop below would treat as transient). Fail fast with a

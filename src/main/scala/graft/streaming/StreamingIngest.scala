@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.dedup.Dedup
 import graft.pipeline.SendoPipeline
+import graft.util.Overlap
 
 /** Streaming corpus ingestion: readStream → per-micro-batch incremental
   * dedup → staged MERGE into the parquet warehouse, via foreachBatch —
@@ -30,29 +31,17 @@ import graft.pipeline.SendoPipeline
 object StreamingIngest {
 
   /** Overlap a batch's two INDEPENDENT output writes (survivors +
-    * index) on two driver threads — guide §2.6 "overlap independent
-    * jobs": the writes target disjoint paths, both are idempotent
-    * partition overwrites, and the gates' documented partial-failure
-    * story (docs-written/index-crashed reconverges on replay) already
-    * covers every interleaving, so ordering between them was never
-    * load-bearing. The second job's tasks back-fill executor slots the
-    * first job's tail leaves idle. Failures propagate after both
-    * complete (never abandon a running write mid-flight).
-    * SPARK_GRAFT_SEQWRITES=1 restores sequential writes for A/B runs —
-    * the SPARK_GRAFT_STATESTORE convention; the driver never sets it. */
-  private def writeBoth(a: => Unit, b: => Unit): Unit = {
-    if (sys.env.get("SPARK_GRAFT_SEQWRITES").contains("1")) { a; b; return }
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fa = Future(a)
-    val fb = Future(b)
-    // Await both before rethrowing either, so a failed docs write can
-    // never leave the index write running against a torn table.
-    val ra = scala.util.Try(Await.result(fa, Duration.Inf))
-    val rb = scala.util.Try(Await.result(fb, Duration.Inf))
-    ra.get; rb.get
-  }
+    * index) — guide §2.6 "overlap independent jobs": the writes target
+    * disjoint paths, both are idempotent partition overwrites, and the
+    * gates' documented partial-failure story (docs-written/index-crashed
+    * reconverges on replay) already covers every interleaving, so
+    * ordering between them was never load-bearing. The second job's
+    * tasks back-fill executor slots the first job's tail leaves idle.
+    * [[Overlap.both]] joins both before rethrowing either, so a failed
+    * docs write never leaves the index write running against a torn
+    * table. */
+  private def writeBoth(a: => Unit, b: => Unit): Unit =
+    Overlap.both("ingest-survivors-write")(a)(b)
 
   private val fpSchema = StructType(Seq(StructField("fp", StringType)))
 
@@ -233,10 +222,9 @@ object StreamingIngest {
     val spark = batch.sparkSession
     val idx = readIndex(spark, warehouseDir, bandIndexTable(table),
       bandIdxSchema, excludeBatch = Some(batchId))
-    // WithIndex variant: survivors' bucket keys come from the SAME
-    // pinned bucket table the dedup computed — one shingle+signature
-    // pass per batch, not two.
-    val (kept, keptBuckets) = Dedup.incrementalMinhashDedupWithIndex(
+    // Survivors' bucket keys come from the SAME pinned bucket table the
+    // dedup computed — one shingle+signature pass per batch, not two.
+    val (kept, keptBuckets) = Dedup.incrementalMinhashDedup(
       batch.dropDuplicates(pk), idx, textCol, pk, shingleN, bands,
       rowsPerBand, family)
     // No isEmpty probe and no persist (r14): the probe was one whole
@@ -276,8 +264,9 @@ object StreamingIngest {
     val spark = batch.sparkSession
     val idx = readIndex(spark, warehouseDir, lshIndexTable(table),
       lshIdxSchema, excludeBatch = Some(batchId))
-    // WithIndex variant: one signing pass per batch, not two.
-    val (kept, keptKeys) = Dedup.incrementalEmbeddingDedupWithIndex(
+    // Survivors' keys from the dedup's own bucket table: one signing
+    // pass per batch, not two.
+    val (kept, keptKeys) = Dedup.incrementalEmbeddingDedup(
       batch.dropDuplicates(pk), idx, pk, vecCol, dims, tables, bits)
     // Same r14 trim as ingestBatchNearDup: no isEmpty probe job, no
     // single-consumer persist (the signed buckets are pinned inside

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.functions.Knn
 import graft.model.Tables
 
 class DedupSpec extends AnyFunSuite with SparkTestBase {
@@ -325,7 +326,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       (11L, "unrelated words one two three four five six seven eight nine ten"),
     ).toDF("doc_id", "text")
     val idx = Dedup.minhashBandIndex(corpus, "text", "doc_id")
-    val kept = Dedup.incrementalMinhashDedup(batch, idx, "text", "doc_id")
+    val kept = Dedup.incrementalMinhashDedup(batch, idx, "text", "doc_id")._1
       .select("doc_id").as[Long].collect().toSet
     assert(kept == Set(11L))
   }
@@ -338,7 +339,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       (11L, longB),
       (12L, "completely different text about spark catalyst optimizer internals"),
     ).toDF("doc_id", "text")
-    val kept = Dedup.incrementalMinhashDedup(batch, empty, "text", "doc_id")
+    val kept = Dedup.incrementalMinhashDedup(batch, empty, "text", "doc_id")._1
       .select("doc_id").as[Long].collect().toSet
     assert(kept == Set(10L, 12L))
   }
@@ -354,7 +355,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       (12L, "two tokens"),              // < shingleN tokens: no buckets
       (13L, "two tokens"),              // identical but also bucketless
     ).toDF("doc_id", "text")
-    val kept = Dedup.incrementalMinhashDedup(batch, idx, "text", "doc_id")
+    val kept = Dedup.incrementalMinhashDedup(batch, idx, "text", "doc_id")._1
       .select("doc_id").as[Long].collect().toSet
     assert(kept == Set(10L, 11L, 12L, 13L))
   }
@@ -366,14 +367,14 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // pairs with a corpus doc or a smaller batch doc — i.e. the
     // incremental path reproduces the all-pairs candidate graph's
     // one-hop rule without ever touching corpus text. Candidate-level
-    // comparison, so use minhashCandidates' contract via pairs at
-    // threshold 0 (every candidate surfaces, no verify cut).
+    // comparison: pairs at threshold 0 (every candidate surfaces, no
+    // verify cut).
     val docs = Tables.documents(spark, sf).select($"doc_id", $"text", $"source")
     val corpus = docs.filter($"source" === "src0")
     val batch = docs.filter($"source" =!= "src0")
     val kept = Dedup.incrementalMinhashDedup(batch,
         Dedup.minhashBandIndex(corpus, "text", "doc_id"),
-        "text", "doc_id")
+        "text", "doc_id")._1
       .select("doc_id").as[Long].collect().toSet
     val corpusIds = corpus.select("doc_id").as[Long].collect().toSet
     val batchIds = batch.select("doc_id").as[Long].collect().toSet
@@ -490,7 +491,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val corpus = docs.filter($"source" === "src0")
     val batch = docs.filter($"source" =!= "src0")
     val idx = Dedup.minhashBandIndex(corpus, "text", "doc_id")
-    val (kept, keys) = Dedup.incrementalMinhashDedupWithIndex(
+    val (kept, keys) = Dedup.incrementalMinhashDedup(
       batch, idx, "text", "doc_id")
     def keySet(df: org.apache.spark.sql.DataFrame) =
       df.select($"band".cast("int"), $"bh")
@@ -505,7 +506,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val corpus = emb.filter($"vec_id" % 3 === 0)
     val batch = emb.filter($"vec_id" % 3 =!= 0)
     val idx = Dedup.embeddingLshIndex(corpus, "vec_id", "embedding", dims = 64)
-    val (kept, keys) = Dedup.incrementalEmbeddingDedupWithIndex(
+    val (kept, keys) = Dedup.incrementalEmbeddingDedup(
       batch, idx, "vec_id", "embedding", dims = 64)
     def keySet(df: org.apache.spark.sql.DataFrame) =
       df.select($"t".cast("int"), $"bucket".cast("long"))
@@ -585,7 +586,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       (5L, Array(0.6f, -0.8f)),     // bucket 1, far from 1 and 3 -> kept
     ).toDF("vec_id", "embedding")
     val got = Dedup.semanticDedup(vecs, "vec_id", "embedding",
-      centroids = 2, threshold = 0.95)
+      Knn.firstCentroids(vecs, "vec_id", "embedding", 2), threshold = 0.95)
       .select($"vid").as[Long].collect().toSet
     assert(got == Set(1L, 2L, 5L))
   }
@@ -603,7 +604,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       (4L, Array(0.7070f, 0.7072f)), // hair nearer centroid 2
     ).toDF("vec_id", "embedding")
     val out = Dedup.semanticDedup(vecs, "vec_id", "embedding",
-      centroids = 2, threshold = 0.99)
+      Knn.firstCentroids(vecs, "vec_id", "embedding", 2), threshold = 0.99)
     val buckets = out.select($"vid", $"bucket")
       .as[(Long, Long)].collect().toMap
     assert(buckets.keySet == Set(1L, 2L, 3L, 4L))
@@ -622,8 +623,9 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       (3L, Array(0.9995f, 0.02f)),  // near-dup of 1
       (4L, Array(0.02f, 0.9995f)),  // near-dup of 2
     ).toDF("vec_id", "embedding")
-    val got = Dedup.semanticDedupTrained(vecs, "vec_id", "embedding",
-      centroids = 2, iterations = 2, threshold = 0.95)
+    val got = Dedup.semanticDedup(vecs, "vec_id", "embedding",
+      Knn.kmeans(vecs, "vec_id", "embedding", 2, iterations = 2),
+      threshold = 0.95)
       .select($"vid").as[Long].collect().toSet
     assert(got == Set(1L, 2L))
   }
@@ -742,7 +744,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       .toDF("vec_id", "embedding")
     val idx = Dedup.embeddingLshIndex(corpus, "vec_id", "embedding", dims = 8)
     val kept = Dedup.incrementalEmbeddingDedup(batch, idx,
-        "vec_id", "embedding", dims = 8)
+        "vec_id", "embedding", dims = 8)._1
       .select($"vec_id").as[Long].collect().toSet
     assert(!kept.contains(4L), "exact copy of an indexed vector must drop")
     assert(!kept.contains(16L), "larger id of an identical in-batch pair must drop")
@@ -760,11 +762,11 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val batch = Seq((4L, u), (12L, x)).toDF("vec_id", "embedding")
     val idx = Dedup.embeddingLshIndex(corpus, "vec_id", "embedding", dims = 8)
     val kept = Dedup.incrementalEmbeddingDedup(batch, idx,
-      "vec_id", "embedding", dims = 8)
+      "vec_id", "embedding", dims = 8)._1
     val appended = idx.unionByName(
       Dedup.embeddingLshIndex(kept, "vec_id", "embedding", dims = 8)).distinct()
     val replay = Dedup.incrementalEmbeddingDedup(batch, appended,
-        "vec_id", "embedding", dims = 8)
+        "vec_id", "embedding", dims = 8)._1
       .select($"vec_id").as[Long].collect()
     assert(replay.isEmpty, s"replay kept ${replay.mkString(",")}")
   }

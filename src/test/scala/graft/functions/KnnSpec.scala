@@ -72,8 +72,8 @@ class KnnSpec extends AnyFunSuite with SparkTestBase {
     def recallOf(df: org.apache.spark.sql.DataFrame): Double =
       df.select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
         .intersect(exact).size.toDouble / exact.size
-    val trained = recallOf(Knn.ivfTrained(emb, queries, "vec_id", "embedding",
-      10, 16, 4, iterations = 3))
+    val trained = recallOf(Knn.ivf(emb, queries, "vec_id", "embedding",
+      10, Knn.kmeans(emb, "vec_id", "embedding", 16, iterations = 3), 4))
     assert(trained >= 0.7, s"trained recall $trained")
   }
 
@@ -118,7 +118,8 @@ class KnnSpec extends AnyFunSuite with SparkTestBase {
       .withColumn("dot", aggregate(zip_with($"qv", $"cv", _ * _), lit(0.0), _ + _))
       .withColumn("rk", row_number().over(w)).filter($"rk" <= 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val pq = Knn.pqTopK(emb, queries, "vec_id", "embedding", k = 10)
+    val pq = Knn.pqTopK(emb, queries, "vec_id", "embedding", k = 10,
+      Knn.pqCodebooks(emb, "vec_id", "embedding", 16, 16, 64))
     val rows = pq.select("query_id", "neighbor_id", "rk")
       .as[(Long, Long, Int)].collect()
     // Shape: 10 self-free ranked rows per query.
@@ -272,12 +273,14 @@ class KnnSpec extends AnyFunSuite with SparkTestBase {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id", "score", "rk")
         .as[(Long, Long, Double, Int)].collect().toSet
+    val stdBooks = Knn.pqCodebooks(emb, "vec_id", "embedding", 16, 16, 64)
     val viaInt = rows(Knn.ivfPq(emb, queries, "vec_id", "embedding",
-      k = 10, centroids = 16, nprobe = 4))
+      k = 10, Knn.firstCentroids(emb, "vec_id", "embedding", 16), nprobe = 4,
+      stdBooks))
     val cents = emb.orderBy($"vec_id").limit(16)
       .select($"vec_id".as("centroid_id"), $"embedding".as("centv"))
-    val viaWith = rows(Knn.ivfPqWith(emb, queries, "vec_id", "embedding",
-      k = 10, cents = cents, nprobe = 4))
+    val viaWith = rows(Knn.ivfPq(emb, queries, "vec_id", "embedding",
+      k = 10, cents = cents, nprobe = 4, stdBooks))
     assert(viaInt == viaWith && viaInt.nonEmpty)
     // Trained codebooks: same rank-addressed one-row flat format as
     // pqCodebooks (m*k sub-arrays of dims/m components), consumable by
@@ -288,9 +291,8 @@ class KnnSpec extends AnyFunSuite with SparkTestBase {
     val row = books.as[Seq[Seq[Double]]].collect()
     assert(row.length == 1 && row.head.length == 16 &&
       row.head.forall(_.length == 16))
-    val trained = Knn.ivfPqWith(emb, queries, "vec_id", "embedding",
-      k = 10, cents = cents, nprobe = 4, m = 4, codebook = 4,
-      booksOpt = Some(books))
+    val trained = Knn.ivfPq(emb, queries, "vec_id", "embedding",
+      k = 10, cents = cents, nprobe = 4, books, m = 4, codebook = 4)
     val perQ = trained.groupBy($"query_id")
       .agg(org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n"),
@@ -302,27 +304,27 @@ class KnnSpec extends AnyFunSuite with SparkTestBase {
   test("ivfPq refine leg degenerates to ivfWith at refine >= candidates (r14)") {
     // The law that pins the exact-re-rank implementation: with a refine
     // budget covering every probed candidate, ADC selection selects
-    // everything and the exact re-rank IS ivfWith's scoring — same
+    // everything and the exact re-rank IS ivf's scoring — same
     // buckets, same probes, same cosine, same tiebreaks. Probe 23b is
     // the scale receipt for WHY the leg exists (ADC preserves candidacy,
     // not rank); this is the correctness pin for WHAT it computes.
     val emb = Tables.embeddings(spark, sf)
     val queries = emb.filter($"vec_id" < 5)
-    val cents = emb.orderBy($"vec_id").limit(16)
-      .select($"vec_id".as("centroid_id"), $"embedding".as("centv"))
+    val cents = Knn.firstCentroids(emb, "vec_id", "embedding", 16)
     val n = emb.count().toInt
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id", "cosine", "rk")
         .as[(Long, Long, Double, Int)].collect().toSet
-    val refined = rows(Knn.ivfPqWith(emb, queries, "vec_id", "embedding",
-      k = 10, cents = cents, nprobe = 4, refine = n))
-    val exact = rows(Knn.ivfWith(emb, queries, "vec_id", "embedding",
+    val books = Knn.pqCodebooks(emb, "vec_id", "embedding", 16, 16, 64)
+    val refined = rows(Knn.ivfPq(emb, queries, "vec_id", "embedding",
+      k = 10, cents = cents, nprobe = 4, books, refine = n))
+    val exact = rows(Knn.ivf(emb, queries, "vec_id", "embedding",
       k = 10, cents, nprobe = 4))
     assert(refined == exact && refined.nonEmpty)
     // And a small refine budget returns a full ranked top-k per query
     // (the ADC candidate pool at this geometry is >= 50 per query).
-    val small = Knn.ivfPqWith(emb, queries, "vec_id", "embedding",
-      k = 10, cents = cents, nprobe = 4, refine = 50)
+    val small = Knn.ivfPq(emb, queries, "vec_id", "embedding",
+      k = 10, cents = cents, nprobe = 4, books, refine = 50)
       .groupBy($"query_id").agg(
         org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1)).as("n"))
@@ -362,7 +364,7 @@ class KnnSpec extends AnyFunSuite with SparkTestBase {
     val exact = Knn.bruteForce(emb, queries, "vec_id", "embedding", 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val approx = Knn.ivf(emb, queries, "vec_id", "embedding",
-      k = 10, centroids = 16, nprobe = 4)
+      k = 10, Knn.firstCentroids(emb, "vec_id", "embedding", 16), nprobe = 4)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = approx.intersect(exact).size.toDouble / exact.size
     assert(recall >= 0.6, s"ivf recall $recall")
@@ -374,11 +376,13 @@ class KnnSpec extends AnyFunSuite with SparkTestBase {
     // the composition against both parents.
     val emb = Tables.embeddings(spark, sf)
     val queries = emb.filter($"vec_id" < 5)
+    val books = Knn.pqCodebooks(emb, "vec_id", "embedding", 16, 16, 64)
     val full = Knn.ivfPq(emb, queries, "vec_id", "embedding",
-      k = 10, centroids = 16, nprobe = 16)
+      k = 10, Knn.firstCentroids(emb, "vec_id", "embedding", 16),
+      nprobe = 16, books)
       .select("query_id", "neighbor_id", "score", "rk")
       .as[(Long, Long, Double, Int)].collect().toSet
-    val pq = Knn.pqTopK(emb, queries, "vec_id", "embedding", k = 10)
+    val pq = Knn.pqTopK(emb, queries, "vec_id", "embedding", k = 10, books)
       .select("query_id", "neighbor_id", "score", "rk")
       .as[(Long, Long, Double, Int)].collect().toSet
     assert(full == pq)
@@ -390,7 +394,8 @@ class KnnSpec extends AnyFunSuite with SparkTestBase {
     val exact = Knn.bruteForce(emb, queries, "vec_id", "embedding", 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val approx = Knn.ivfPq(emb, queries, "vec_id", "embedding",
-      k = 10, centroids = 16, nprobe = 4)
+      k = 10, Knn.firstCentroids(emb, "vec_id", "embedding", 16), nprobe = 4,
+      Knn.pqCodebooks(emb, "vec_id", "embedding", 16, 16, 64))
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = approx.intersect(exact).size.toDouble / exact.size
     assert(recall >= 0.4, s"ivfPq recall $recall")

@@ -57,9 +57,10 @@ object EmbSkewProbe {
     }
 
     report("ivf16",
-      Knn.ivfAssign(emb, "vec_id", "embedding", 16), Seq("bucket"))
+      Knn.ivfAssign(emb, "vec_id", "embedding",
+        Knn.firstCentroids(emb, "vec_id", "embedding", 16)), Seq("bucket"))
     report(s"kmeans$k",
-      Knn.assignWith(emb, "vec_id", "embedding",
+      Knn.ivfAssign(emb, "vec_id", "embedding",
         Knn.kmeans(emb, "vec_id", "embedding", k, 3)), Seq("bucket"))
     // Same adaptive rule as embeddingLshPairs (the LIBRARY path): since
     // r12 the bits and since r14 the TABLES auto-size with the corpus —

@@ -17,8 +17,8 @@ import graft.model.Tables
   * sample RecallProbe and IvfScaleProbe grade with, with rows for:
   *
   *  - the registered fixture geometry (gate contrast);
-  *  - trained √N centroids + deterministic codebooks, nprobe swept
-  *    ([[Knn.ivfPqWith]]);
+  *  - trained √N centroids ([[Knn.kmeans]]) + deterministic codebooks,
+  *    nprobe swept;
   *  - trained √N centroids + per-subspace TRAINED codebooks
   *    ([[Knn.pqCodebooksTrained]] — the configuration FAISS ships);
   *  - plain trained IVF on exact vectors (probe 23's row, the
@@ -56,6 +56,8 @@ object IvfPqProbe {
     val tBooks = Knn.pqCodebooksTrained(emb, "vec_id", "embedding",
       m = 16, k = 16, dims = 64).localCheckpoint()
     val booksSec = (System.nanoTime() - t1) / 1e9
+    val books = Knn.pqCodebooks(emb, "vec_id", "embedding", 16, 16, 64)
+      .localCheckpoint()
     println(f"""{"probe":"ivfpq","dir":"$dir","vectors":$n,"centroids_requested":$kC,"centroids":$cReal,"train_sec":$trainSec%.2f,"trained_books_sec":$booksSec%.2f,"queries":${qs.count()}}""")
 
     // IVF arms carry (centroids, nprobe, scan_frac); the cross-family
@@ -80,17 +82,18 @@ object IvfPqProbe {
     // Gate fixture geometry: the oracle-replayable contrast row.
     arm("gate_ivfpq16",
       Knn.ivfPq(emb, qs, "vec_id", "embedding", k = 10,
-        centroids = 16, nprobe = 4), Some((16, 4)))
+        Knn.firstCentroids(emb, "vec_id", "embedding", 16), nprobe = 4,
+        books), Some((16, 4)))
     // Trained centroids + deterministic books, nprobe swept.
     Seq(4, 16, 32).foreach { np =>
       arm("trained_ivfpq",
-        Knn.ivfPqWith(emb, qs, "vec_id", "embedding", k = 10,
-          cents = cents, nprobe = np), Some((cReal, np)))
+        Knn.ivfPq(emb, qs, "vec_id", "embedding", k = 10,
+          cents = cents, nprobe = np, books), Some((cReal, np)))
     }
     // Trained centroids + trained books — the FAISS-shipped config.
     arm("trained_ivfpq_tbooks",
-      Knn.ivfPqWith(emb, qs, "vec_id", "embedding", k = 10,
-        cents = cents, nprobe = 16, booksOpt = Some(tBooks)),
+      Knn.ivfPq(emb, qs, "vec_id", "embedding", k = 10,
+        cents = cents, nprobe = 16, tBooks),
       Some((cReal, 16)))
     // The REFINE leg (FAISS IndexRefineFlat, r14): ADC selects the
     // top-R candidates, whose raw vectors re-rank exactly — a second
@@ -99,15 +102,15 @@ object IvfPqProbe {
     // retains of the rank it cannot express.
     Seq(100, 1000).foreach { r =>
       arm(s"trained_ivfpq_refine$r",
-        Knn.ivfPqWith(emb, qs, "vec_id", "embedding", k = 10,
-          cents = cents, nprobe = 16, refine = r), Some((cReal, 16)))
+        Knn.ivfPq(emb, qs, "vec_id", "embedding", k = 10,
+          cents = cents, nprobe = 16, books, refine = r), Some((cReal, 16)))
     }
     // Denominator rows: the same pruning on EXACT vectors (PQ's recall
     // cost in isolation), and the cross-family LSH-mp row at the
     // registered width-scaled budget (no centroid fields — its
     // candidate fraction is not nprobe/C).
     arm("trained_ivf_exact",
-      Knn.ivfWith(emb, qs, "vec_id", "embedding", k = 10,
+      Knn.ivf(emb, qs, "vec_id", "embedding", k = 10,
         cents, nprobe = 16), Some((cReal, 16)))
     val b = Knn.autoBits(n)
     arm("lsh_mp_registered",

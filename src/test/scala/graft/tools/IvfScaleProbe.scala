@@ -52,7 +52,7 @@ object IvfScaleProbe {
     def arm(name: String, centsDf: org.apache.spark.sql.DataFrame,
         c: Int, nprobe: Int): Unit = {
       val t1 = System.nanoTime()
-      val approx = Knn.ivfWith(emb, qs, "vec_id", "embedding", k = 10,
+      val approx = Knn.ivf(emb, qs, "vec_id", "embedding", k = 10,
         centsDf, nprobe)
         .select(col("query_id"), col("neighbor_id"))
       val hits = exact.join(approx, Seq("query_id", "neighbor_id"),
@@ -63,9 +63,8 @@ object IvfScaleProbe {
 
     Seq(4, 8, 16, 32).foreach(np => arm("trained_sqrtN", cents, cReal, np))
     // The registered gate geometry, as the contrast row.
-    val cents16 = emb.orderBy(col("vec_id")).limit(16)
-      .select(col("vec_id").as("centroid_id"),
-        col("embedding").as("centv")).localCheckpoint()
+    val cents16 = Knn.firstCentroids(emb, "vec_id", "embedding", 16)
+      .localCheckpoint()
     arm("gate_ivf16", cents16, 16, 4)
     spark.stop()
   }

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
-/** Scratch profiler for the kmeans/semanticDedupTrained path: runs the
+/** Scratch profiler for the kmeans-trained semanticDedup path: runs the
   * dedup_semantic_trained query body once warmed, with a listener
   * printing per-job wall times, so variants can be compared job-by-job
   * rather than by one opaque total. Not part of the engine. */
@@ -30,9 +30,10 @@ object KmeansProbe {
       val emb = graft.model.Tables.embeddings(spark, dir)
       val k = math.max(16, math.ceil(math.sqrt(emb.count().toDouble)).toInt)
       val t0 = System.nanoTime()
-      graft.dedup.Dedup.semanticDedupTrained(emb, "vec_id", "embedding",
-          centroids = k, iterations = 3, threshold = 0.4,
-          graft.GraftFunctions.cosineSim)
+      graft.dedup.Dedup.semanticDedup(emb, "vec_id", "embedding",
+          graft.functions.Knn.kmeans(emb, "vec_id", "embedding", k,
+            iterations = 3),
+          threshold = 0.4, graft.GraftFunctions.cosineSim)
         .orderBy(col("vid"))
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
